@@ -93,11 +93,6 @@ def validate_events(df: DataFrame, event_col: str = "event_type") -> DataFrame:
     return df.where(F.col(event_col).isNotNull())
 
 
-def invalid_events(df: DataFrame, event_col: str = "event_type") -> DataFrame:
-    """The reject stream — rows the reference would error on."""
-    return df.where(F.col(event_col).isNull())
-
-
 def stamp_origin(df: DataFrame, origin: str) -> DataFrame:
     """origin column is only added when configured non-empty (main.go:181)."""
     if origin == "":

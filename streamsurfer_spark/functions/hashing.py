@@ -64,11 +64,6 @@ def hash64_expr(sql_expr: str) -> str:
     return md5_long64_expr(sql_expr)
 
 
-def duckdb_md5_long64(sql_expr: str) -> str:
-    """DuckDB twin of md5_long64_expr — used when generating oracle SQL."""
-    return f"('0x' || substr(md5({sql_expr}), 1, 15))::BIGINT"
-
-
 def md5_long64_py(s: str) -> int:
     """Python twin (unit-test oracle)."""
     return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)

@@ -186,6 +186,8 @@ def lsh_candidate_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     bucket_cap: int = LSH_BUCKET_CAP,
+    part: int = 0,
+    n_parts: int = 1,
 ) -> DataFrame:
     """MinHash-LSH candidate pairs: (doc_a, doc_b, n_shared_bands).
 
@@ -197,75 +199,28 @@ def lsh_candidate_pairs(
     The cap is enforced with a row_number window over (band, band_key):
     Spark's WindowGroupLimit prunes every map partition to `cap` rows per
     bucket BEFORE the exchange, so neither the shuffle nor any aggregation
-    buffer ever holds an unbounded bucket. The survivors pair up via a
-    same-key collect_list (reuses the window's partitioning — no extra
-    exchange) and a pure expression expansion.
-    """
-    from pyspark.sql import Window
+    buffer ever holds an unbounded bucket. The survivors pair up through
+    ``grouped_pair_expand`` (reuses the window's partitioning — no extra
+    exchange).
 
-    bands = lsh_bands(minhash_signature(with_shingles(df, text_col)), id_col)
-    w = Window.partitionBy("band", "band_key").orderBy(id_col)
-    capped = (
-        bands.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= bucket_cap)
-        .drop("_rn")
-    )
-    buckets = capped.groupBy("band", "band_key").agg(
-        F.array_sort(F.collect_list(id_col)).alias("ids")
-    )
-    pairs = buckets.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(ids, (x, i) ->"
-                " transform(slice(ids, i + 2, size(ids)), y -> struct(x, y))))"
-            )
-        ).alias("p")
-    )
-    return (
-        pairs.select(F.col("p.x").alias("doc_a"), F.col("p.y").alias("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_shared_bands"))
-    )
-
-
-def lsh_band_pair_partials(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bucket_cap: int = LSH_BUCKET_CAP,
-    part: int = 0,
-    n_parts: int = 1,
-) -> DataFrame:
-    """ONE bounded pass of the LSH band exchange: the slice-of-bucket-space
-    partials that sum to lsh_candidate_pairs' n_shared_bands.
-
-    The monolithic band exchange shuffles N_BANDS rows per document —
-    corpus-LINEAR scratch, and after the shingle exchange was sliced it
-    became qp08's binding scratch stage (BASELINE.md Round 12 finding 2:
-    a pass-count-INDEPENDENT ~53 GB floor at 5M docs). Same recipe as
-    shingle_intersection_partials: keep only bucket keys with
-    pmod(xxhash64(band, band_key), n_parts) == part, filtered AFTER the
-    per-row band explode but BEFORE the bucket exchange, so the shuffle
-    itself shrinks to the slice. Slice self-containment: the per-bucket
-    cap window, the same-key collect_list, and the pair expansion are
-    all (band, band_key)-keyed and a bucket lives wholly inside one
-    slice, so each slice is EXACTLY the global computation restricted to
-    its buckets; a pair's shared-band count sums across slices
-    (disjoint bucket sets):
+    ``part``/``n_parts`` run ONE bounded pass over a slice of bucket
+    space: only bucket keys with pmod(xxhash64(band, band_key), n_parts)
+    == part survive, filtered after the per-row band explode and before
+    the bucket exchange, so the shuffle itself shrinks to the slice. The
+    cap window, the expansion and the pair groupBy are all bucket-keyed
+    and a bucket lives wholly inside one slice, so the slices' counts sum
+    to the single-pass result (disjoint bucket sets):
 
         n_shared_bands(a, b) = Σ_p n_shared_p(a, b)
 
-    xxhash64 (fixed seed, documented stable) over the bucket key is the
-    uniform slicer — band_key is itself a minhash digest string, so
-    slices are balanced. The per-slice CPU re-pays the signature math
-    each pass (the same passes-vs-scratch trade the shingle slices
-    make); signature cost is per-row expression work that scales out,
-    scratch is a single-box ceiling — the right side of the trade at
-    100 TB. Used by pipeline_q.qp08_canonical_map_bounded; equality
-    with the monolithic plan is pinned by tests/test_qp08_bounded.py
-    at two SFs × two pass counts.
+    Each pass re-pays the per-row signature math to bound the band
+    exchange's scratch to ~1/n_parts of the corpus — used by
+    pipeline_q.qp08_canonical_map_bounded and pinned by
+    tests/test_qp08_bounded.py. The default (0, 1) is the whole space.
     """
     from pyspark.sql import Window
+
+    from streamsurfer_spark.functions.pairs import grouped_pair_expand
 
     bands = lsh_bands(minhash_signature(with_shingles(df, text_col)), id_col)
     if n_parts > 1:
@@ -278,20 +233,12 @@ def lsh_band_pair_partials(
         .where(F.col("_rn") <= bucket_cap)
         .drop("_rn")
     )
-    buckets = capped.groupBy("band", "band_key").agg(
-        F.array_sort(F.collect_list(id_col)).alias("ids")
-    )
-    pairs = buckets.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(ids, (x, i) ->"
-                " transform(slice(ids, i + 2, size(ids)), y -> struct(x, y))))"
-            )
-        ).alias("p")
-    )
     return (
-        pairs.select(F.col("p.x").alias("doc_a"), F.col("p.y").alias("doc_b"))
-        .groupBy("doc_a", "doc_b")
+        grouped_pair_expand(capped, ["band", "band_key"], [id_col])
+        .groupBy(
+            F.col(f"_pa.{id_col}").alias("doc_a"),
+            F.col(f"_pb.{id_col}").alias("doc_b"),
+        )
         .agg(F.count("*").alias("n_shared_bands"))
     )
 

@@ -61,9 +61,3 @@ def broadcast_join_count(df: DataFrame) -> int:
 
 def has_sort_merge_join(df: DataFrame) -> bool:
     return "SortMergeJoin" in formatted_plan(df)
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    """Whole-stage-codegen span count (higher isn't better per se; zero
-    means everything fell out of codegen — a red flag)."""
-    return len(set(re.findall(r"WholeStageCodegen \((\d+)\)", formatted_plan(df))))

@@ -660,15 +660,9 @@ def qp06_semdedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = similarity.cosine_near_dup_pairs(
         blocked, SEMDEDUP_TAU, block_col="cent_id"
     )
-    # star, not label: within-cell cosine chains (a~b~c without a~c) have
-    # no diameter bound, and label propagation RAISES past max_iter=25
-    # rounds — a real-corpus hazard the fixtures never hit. Star contracts
-    # in O(log n) rounds with identical output (min-label per component;
-    # test_graph.py pins the parity), at a measured ≤1.2× warm fixture
-    # cost (r9 A/B: 8.7 vs 7.5 s).
-    comp = graph.connected_components(
-        pairs, "id_a", "id_b", algorithm="star"
-    ).select(F.col("id").alias("vec_id"), "cluster_id")
+    comp = graph.connected_components(pairs, "id_a", "id_b").select(
+        F.col("id").alias("vec_id"), "cluster_id"
+    )
     dropped = (F.col("cluster_id").isNotNull()) & (
         F.col("vec_id") != F.col("cluster_id")
     )
@@ -802,7 +796,7 @@ QP06_SQL = _qp06_sql()
 # gated hint every manifest join would plan as a corpus-wide sort-merge —
 # the r10-measured 3× trap that kept qp07 monolithic until r14. Above the
 # cap the planner's shuffle join runs unchanged (a 100 TB survivor
-# manifest is never broadcast). Env-tunable like CC_DRIVER_EDGE_CAP.
+# manifest is never broadcast). Env-tunable for cluster sizing.
 MANIFEST_BROADCAST_ROW_CAP = int(
     os.environ.get("SPARK_GRAFT_MANIFEST_BROADCAST_ROW_CAP", str(4_000_000))
 )
@@ -1107,30 +1101,41 @@ def qp08_canonical_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     plumbing — everything else is reused, which is the point.
     """
     import pyspark.sql.functions as F
-    from pyspark.sql import Window
 
-    from streamsurfer_spark.operators import dedup, graph
+    from streamsurfer_spark.operators import dedup
     from streamsurfer_spark.queries.llm_q import CONTAIN_THRESHOLD
 
     docs = table(spark, sf_dir, "documents")
-    w = Window.partitionBy(F.md5("text"))
-    exact_e = (
-        docs.select("doc_id", F.min("doc_id").over(w).alias("mn"))
-        .where(F.col("doc_id") != F.col("mn"))
-        .select(F.col("doc_id").alias("src"), F.col("mn").alias("dst"))
-    )
     lsh_e = dedup.lsh_candidate_pairs(docs).select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
     cont_e = dedup.ngram_containment_pairs(
         docs, threshold=CONTAIN_THRESHOLD
     ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    return _qp08_canonical_tail(docs, lsh_e, cont_e)
+
+
+def _qp08_canonical_tail(
+    docs: DataFrame, lsh_e: DataFrame, cont_e: DataFrame
+) -> DataFrame:
+    """qp08's shared tail: add the exact-dup edge family (window-min over
+    the md5 key), union it with the LSH and containment (src, dst) edges,
+    collapse by connected components and emit (doc_id, canonical_id,
+    cluster_size) ordered by doc_id. Both the monolithic and the bounded
+    qp08 end here, which keeps their outputs hash-identical."""
+    import pyspark.sql.functions as F
+    from pyspark.sql import Window
+
+    from streamsurfer_spark.operators import graph
+
+    w = Window.partitionBy(F.md5("text"))
+    exact_e = (
+        docs.select("doc_id", F.min("doc_id").over(w).alias("mn"))
+        .where(F.col("doc_id") != F.col("mn"))
+        .select(F.col("doc_id").alias("src"), F.col("mn").alias("dst"))
+    )
     edges = exact_e.unionByName(lsh_e).unionByName(cont_e)
-    # star for the same reason as qp06: the merged edge families chain
-    # without a diameter bound, and label propagation raises past 25
-    # rounds; star is O(log n) with identical output (r9 A/B: 7.4 vs
-    # 7.7 s warm — free here)
-    cc = graph.connected_components(edges, "src", "dst", algorithm="star")
+    cc = graph.connected_components(edges, "src", "dst")
     sizes = cc.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
     return (
         cc.join(sizes, "cluster_id")
@@ -1271,7 +1276,7 @@ def qp08_canonical_map_bounded(
     pmod(shingle, n_passes) == p (the distinct, the df-cap window, and
     the self-join are all shingle-keyed, so each slice is self-contained
     and EXACTLY the global computation restricted to its shingles) and —
-    since r13 (r12 verdict item 4) — dedup.lsh_band_pair_partials over
+    since r13 (r12 verdict item 4) — dedup.lsh_candidate_pairs over
     the bucket-key slice pmod(xxhash64(band, band_key), n_passes) == p.
 
     Partials are FOLDED into running accumulators between passes
@@ -1298,8 +1303,8 @@ def qp08_canonical_map_bounded(
     integer partial sums over disjoint shingle/bucket sets are
     associative), so the final stage just READS the last generation —
     no re-aggregation exchange — scores containment exactly as
-    operators/dedup.ngram_containment_pairs does, and reuses qp08's
-    exact-dup edge family verbatim — output is hash-identical to
+    operators/dedup.ngram_containment_pairs does, and ends in qp08's
+    shared tail (_qp08_canonical_tail) — output is hash-identical to
     qp08_canonical_map (pinned by tests/test_qp08_bounded.py at sf0.001
     and sf0.01, incl. pass counts that do not divide either key space
     evenly). Not a registry entry: same operator, different execution
@@ -1309,9 +1314,8 @@ def qp08_canonical_map_bounded(
     import os
 
     import pyspark.sql.functions as F
-    from pyspark.sql import Window
 
-    from streamsurfer_spark.operators import dedup, graph
+    from streamsurfer_spark.operators import dedup
     from streamsurfer_spark.queries.llm_q import CONTAIN_THRESHOLD
     from streamsurfer_spark.scratch import scratch_dir
 
@@ -1365,7 +1369,7 @@ def qp08_canonical_map_bounded(
         # uniform hashes over disjoint key spaces, so one loop bounds
         # both corpus-linear exchanges at ~1/n_passes each (r12 verdict
         # item 4)
-        lsh_p = dedup.lsh_band_pair_partials(docs, part=p, n_parts=n_passes)
+        lsh_p = dedup.lsh_candidate_pairs(docs, part=p, n_parts=n_passes)
         fold("lsh", lsh_p, ["doc_a", "doc_b"], "n_shared_bands", p)
         # release this pass's shuffle files before the next pass: drop
         # the only references, then ask the JVM to GC so ContextCleaner
@@ -1397,31 +1401,13 @@ def qp08_canonical_map_bounded(
         .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     )
 
-    w = Window.partitionBy(F.md5("text"))
-    exact_e = (
-        docs.select("doc_id", F.min("doc_id").over(w).alias("mn"))
-        .where(F.col("doc_id") != F.col("mn"))
-        .select(F.col("doc_id").alias("src"), F.col("mn").alias("dst"))
-    )
     # a pair can surface in several slices (one per shared band); the
     # per-pass folds already summed them, so the accumulator holds
     # lsh_candidate_pairs' distinct pair set exactly — read-only here
     lsh_e = spark.read.parquet(os.path.join(spool, f"lsh/{last}")).select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
-    edges = exact_e.unionByName(lsh_e).unionByName(cont_e)
-    cc = graph.connected_components(edges, "src", "dst", algorithm="star")
-    csizes = cc.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
-    return (
-        cc.join(csizes, "cluster_id")
-        .select(
-            F.col("id").alias("doc_id"),
-            F.col("cluster_id").alias("canonical_id"),
-            "cluster_size",
-        )
-        .orderBy("doc_id")
-    )
-
+    return _qp08_canonical_tail(docs, lsh_e, cont_e)
 
 
 # --- qp09: intake quality gate capstone (round-8 signal composition) ---------

@@ -52,33 +52,23 @@ def test_max_iter_exceeded_raises(spark, force_distributed):
         connected_components(df, max_iter=2)
 
 
-def test_star_matches_label_on_mixed_graph(spark):
-    # pairs, a triangle, a path, and an isolated edge — both algorithms
-    # must produce identical clusterings
-    edges = [(1, 2), (2, 3), (3, 1), (10, 11), (20, 21), (21, 22), (22, 23), (40, 41)]
-    assert _cc(spark, edges, algorithm="star") == _cc(spark, edges, algorithm="label")
-
-
 def test_driver_fastpath_matches_distributed(spark, monkeypatch):
-    """The r13 driver union-find fast path must label EXACTLY like both
-    distributed fixpoints — same node set, same min-label clusters —
+    """The r13 driver union-find fast path must label EXACTLY like the
+    distributed contraction — same node set, same min-label clusters —
     across the crafted shapes (mixed components, self-loop-only node,
     reversed/duplicate edges, string ids)."""
     shapes = [
         [(1, 2), (2, 3), (3, 1), (10, 11), (20, 21), (21, 22), (22, 23), (40, 41)],
         [(7, 7), (1, 2)],
         [(5, 1), (1, 5), (5, 9), (9, 5), (9, 5)],
-        # chain diameter must stay under label propagation's max_iter=25
-        # so the forced-distributed comparison run can converge
         [(i, i + 1) for i in range(1, 20)],
     ]
     for edges in shapes:
-        for alg in ("label", "star"):
-            monkeypatch.setattr(graph, "CC_DRIVER_EDGE_CAP", 10_000)
-            fast = _cc(spark, edges, algorithm=alg)
-            monkeypatch.setattr(graph, "CC_DRIVER_EDGE_CAP", -1)
-            slow = _cc(spark, edges, algorithm=alg)
-            assert fast == slow, (alg, edges[:3])
+        monkeypatch.setattr(graph, "CC_DRIVER_EDGE_CAP", 10_000)
+        fast = _cc(spark, edges)
+        monkeypatch.setattr(graph, "CC_DRIVER_EDGE_CAP", -1)
+        slow = _cc(spark, edges)
+        assert fast == slow, edges[:3]
     # string ids: UTF8 binary order == codepoint order, so the driver
     # min matches Spark's min
     sdf = spark.createDataFrame([("b", "a"), ("b", "c")], "src string, dst string")
@@ -99,59 +89,44 @@ def test_driver_fastpath_schema_and_empty(spark):
     assert [f.dataType.simpleString() for f in out.schema.fields] == ["bigint", "bigint"]
     empty = spark.createDataFrame([], "src long, dst long")
     assert connected_components(empty).count() == 0
-    assert connected_components(empty, algorithm="star").count() == 0
 
 
 def test_star_adversarial_long_chain_converges_in_log_rounds(
     spark, force_distributed
 ):
-    # a 64-node path has diameter 63: min-label propagation needs ~63
-    # rounds, the star contraction halves path length every round, so
-    # 10 rounds (~log2(64) + slack) must suffice
+    # a 64-node path has diameter 63: the star contraction halves path
+    # length every round, so 10 rounds (~log2(64) + slack) must suffice
     edges = [(i, i + 1) for i in range(1, 64)]
-    got = _cc(spark, edges, algorithm="star", max_iter=10)
+    got = _cc(spark, edges, max_iter=10)
     assert got == {i: 1 for i in range(1, 65)}
 
 
 def test_star_direction_and_duplicates(spark):
     # reversed + duplicate edges collapse to the same canonical set
-    got = _cc(spark, [(5, 1), (1, 5), (5, 9), (9, 5), (9, 5)], algorithm="star")
+    got = _cc(spark, [(5, 1), (1, 5), (5, 9), (9, 5), (9, 5)])
     assert got == {1: 1, 5: 1, 9: 1}
 
 
-def test_unknown_algorithm_rejected(spark):
-    df = spark.createDataFrame([(1, 2)], "src long, dst long")
-    with pytest.raises(ValueError, match="unknown algorithm"):
-        connected_components(df, algorithm="bogus")
-
-
 def test_star_keeps_selfloop_only_nodes(spark):
-    """Both algorithms must return the same node set: a node whose only
-    edge is a self-loop used to vanish from the star path while label
-    propagation kept it (r7 review)."""
+    """A node whose only edge is a self-loop must stay in the output as
+    a singleton cluster; it used to vanish from the star path (r7
+    review)."""
     edges = spark.createDataFrame(
         [(7, 7), (1, 2)], "src long, dst long"
     )
-    for alg in ("label", "star"):
-        got = {
-            r.id: r.cluster_id
-            for r in connected_components(edges, algorithm=alg).collect()
-        }
-        assert got == {7: 7, 1: 1, 2: 1}, alg
+    got = {r.id: r.cluster_id for r in connected_components(edges).collect()}
+    assert got == {7: 7, 1: 1, 2: 1}
 
 
-def test_label_checksum_survives_huge_ids(spark):
+def test_star_checksum_survives_huge_ids(spark, force_distributed):
     """Convergence sums run in DECIMAL(38,0): raw long sums of 64-bit
     hash-style ids overflow under ANSI after a handful of rows (r7
-    review; the star path always guarded this)."""
+    review)."""
     big = 9_100_000_000_000_000_000
     edges = spark.createDataFrame(
         [(big, big - 1), (big - 1, big - 2)], "src long, dst long"
     )
-    got = {
-        r.id: r.cluster_id
-        for r in connected_components(edges, algorithm="label").collect()
-    }
+    got = {r.id: r.cluster_id for r in connected_components(edges).collect()}
     assert got == {big: big - 2, big - 1: big - 2, big - 2: big - 2}
 
 

@@ -153,7 +153,7 @@ def test_scratch_dir_reclaimed_at_exit():
         capture_output=True,
         text=True,
         check=True,
-        cwd="/root/repo",
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
     path = out.stdout.strip().splitlines()[-1]
     assert "streamsurfer_scratch_" in path

@@ -86,14 +86,11 @@ def test_lsh_band_partials_sum_to_monolithic(spark):
 
     import pyspark.sql.functions as F
 
-    from streamsurfer_spark.operators.dedup import (
-        lsh_band_pair_partials,
-        lsh_candidate_pairs,
-    )
+    from streamsurfer_spark.operators.dedup import lsh_candidate_pairs
 
     docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
     mono = _rows(lsh_candidate_pairs(docs))
-    parts = [lsh_band_pair_partials(docs, part=p, n_parts=5) for p in range(5)]
+    parts = [lsh_candidate_pairs(docs, part=p, n_parts=5) for p in range(5)]
     summed = (
         reduce(lambda a, b: a.unionByName(b), parts)
         .groupBy("doc_a", "doc_b")

@@ -34,9 +34,10 @@ def test_bench_and_probe_names_resolve():
     """Every name in bench.py's BENCH_QUERIES and scale_probe's PROBES
     must exist in the registry — a typo voids the driver's whole bench
     record (BENCH_r02 died to a single broken query)."""
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from bench import BENCH_QUERIES
     from tools.scale_probe import PROBES
     from streamsurfer_spark.queries import registry

@@ -1,6 +1,6 @@
 """Simulate the driver's correctness gate: vanilla session, sf0.01, oracle compare."""
-import sys, math, hashlib
-sys.path.insert(0, '/root/repo')
+import sys, math, hashlib, os
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 from pyspark.sql import SparkSession
 
