@@ -1,10 +1,10 @@
 """Engine facade: the one-object API a reference user migrates to.
 
-The reference's public surface is the three-method KinesisQueue interface
-(/root/reference/main.go:19-24: Enqueue / Flush / Send) plus constructors.
-This facade exposes (a) those exact semantics on Spark, and (b) the full
-query surface around them — so "a user of the reference can switch and run
-every query they run today" through one entry point.
+One handle over the session, the fixture catalog and the query registry,
+so every registry query runs through one entry point. The reference's
+producer surface (the KinesisQueue Enqueue / Flush / Send interface of
+its main.go) lives in ``sink.kinesis`` (``write_batch_to_kinesis``,
+``kinesis_stream_writer``).
 """
 
 from __future__ import annotations
@@ -12,11 +12,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from streamsurfer_spark.session import DEFAULT_SF_DIR, get_spark, load_tables, table
-from streamsurfer_spark.sink.config import KinesisSinkConfig
 
 
 class Engine:
-    """Session + catalog + sink wiring in one handle.
+    """Session + catalog + query registry in one handle.
 
     >>> eng = Engine(sf_dir="/root/testdata/sf0.001")
     >>> eng.sql("SELECT count(*) AS n FROM lineitem").first().n
@@ -57,28 +56,3 @@ class Engine:
         from streamsurfer_spark.queries import registry
 
         return sorted(registry())
-
-    # --- reference-parity sink surface (Enqueue/Send/Flush ≈ R9/R10/R11) -----
-
-    def kinesis_writer(
-        self,
-        config: KinesisSinkConfig,
-        stream_df: DataFrame,
-        client_factory=None,
-        checkpoint_dir: str | None = None,
-    ):
-        """writeStream handle shipping the envelope through the byte-bounded
-        chunker (the reference's Enqueue path, distributed)."""
-        from streamsurfer_spark.sink.kinesis import (
-            boto3_client_factory,
-            envelope_payload,
-            kinesis_stream_writer,
-        )
-
-        payloads = envelope_payload(stream_df, ts_col=None, origin=config.origin)
-        return kinesis_stream_writer(
-            payloads,
-            config,
-            client_factory=client_factory or boto3_client_factory,
-            checkpoint_dir=checkpoint_dir,
-        )

@@ -75,10 +75,23 @@ NORM_EXPR = (
 # float64 products in the same order as the HOF accumulator (so -0.0,
 # NULL-element poisoning, and NaN propagation all reproduce), and the
 # CASE guard evaluates lazily so ANSI out-of-bounds indexing is
-# unreachable. Measured at 2M evals of the sf0.1 embeddings (noop sink,
-# best-of-3): dot 0.741 → 0.445 s (1.67×), norm 0.525 → 0.411 s (1.28×)
-# — probe recorded in OPTIMIZATION_r13.md; pinned bitwise against the
-# HOF forms by tests/test_properties_r13.py (NULL/NaN/-0.0/ragged).
+# unreachable. Pinned bitwise against the HOF forms by
+# tests/test_properties_r13.py (NULL/NaN/-0.0/ragged).
+#
+# Which form wins depends on the size of the pair stage, so both stay.
+# Per evaluation the unroll is faster (2M evals of the sf0.1 embeddings,
+# noop sink, best-of-3: dot 0.741 → 0.445 s, norm 0.525 → 0.411 s), but
+# its 64-term CASE costs a fixed codegen compile per query. Interleaved
+# query-level A/B, 9 pairs on a 4-core host, outputs row-identical,
+# medians unroll vs HOF:
+#   - large block stages (cosine_near_dup_pairs at sf0.1): the unroll
+#     wins 9/9 — qp06 3.36 vs 4.45 s, ql21 1.65 vs 3.98 s, ql23 1.68 vs
+#     2.71 s;
+#   - small pair stages: HOF wins 9/9 — lsh_near_pairs' capped buckets
+#     (ql10 at sf0.1) 1.35 vs 1.05 s, and qp06's block stage on a
+#     600-vector corpus 2.73 vs 2.16 s.
+# The pair stages keep the unroll as default (``unroll=True``); the call
+# sites where it measured slower (cosine_topk, ql42) pass ``unroll=False``.
 
 
 def _unrolled_sum_sql(terms: list[str]) -> str:
@@ -281,8 +294,9 @@ def cosine_topk(
     # the query level (r14 interleaved A/B, outputs row-identical:
     # ql03 HOF median 1.26 s vs unrolled 2.25 s, ql43 2.92 vs 4.28 —
     # ql43's r12→r13 creep attributes to the r13 unroll landing here).
-    # The unroll stays on the capped block/bucket pair stages, whose
-    # grouped-expand projections showed it flat-to-positive (qp06 A/B).
+    # The capped block/bucket pair stages keep the unroll as default; it
+    # wins there only when the pair stage is large (header above
+    # dot_sql: HOF wins on lsh_near_pairs' buckets and on small corpora).
     p = probes.select(
         F.col(id_col).alias("probe_id"),
         *[F.col(c).alias(f"probe_{c}") for c in probe_cols],

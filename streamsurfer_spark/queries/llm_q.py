@@ -1858,8 +1858,9 @@ def ql42_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the embeddings table against a single broadcast query vector — small
     # enough that the unrolled CASE's fixed codegen-compile cost exceeds
     # its per-element saving (r14 A/B: HOF ~1.2× faster here; the forms
-    # are bit-identical so the result is unchanged). The unroll stays on
-    # the O(pairs·d) cosine stages in operators/similarity.py.
+    # are bit-identical so the result is unchanged). The pair stages in
+    # operators/similarity.py keep the unroll as default, which wins
+    # only when the pair stage is large (see the header above dot_sql).
     qvec = emb.where(F.col("vec_id") == RRF_QUERY_VEC_ID).select(
         F.col("embedding").alias("_qv"),
         F.expr(norm_sql("embedding", unroll=False)).alias("_qn"),

@@ -796,10 +796,8 @@ QP06_SQL = _qp06_sql()
 # gated hint every manifest join would plan as a corpus-wide sort-merge —
 # the r10-measured 3× trap that kept qp07 monolithic until r14. Above the
 # cap the planner's shuffle join runs unchanged (a 100 TB survivor
-# manifest is never broadcast). Env-tunable for cluster sizing.
-MANIFEST_BROADCAST_ROW_CAP = int(
-    os.environ.get("SPARK_GRAFT_MANIFEST_BROADCAST_ROW_CAP", str(4_000_000))
-)
+# manifest is never broadcast).
+MANIFEST_BROADCAST_ROW_CAP = 4_000_000
 
 
 def _training_mix_stages(

@@ -402,19 +402,10 @@ ORDER BY 1, 2
 
 # --- Q-S10: stream-stream interval join (real streaming run) -----------------
 
-def qs10_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-STREAM interval join in a REAL run: purchases joined to the
-    same user's errors within ±6 h of event time, both sides read as
-    streams (availableNow → memory). Exactness here depends on the
-    SINGLE-BATCH availableNow run: with the whole file in micro-batch 1
-    the watermark is still 0 while every row is joined, so no input can be
-    older than watermark−interval and the result equals the batch
-    inequality join (no finalization cutoff to replicate, unlike
-    qs08/qs09's append-mode aggregates). A multi-batch variant (e.g.
-    max_files_per_trigger as qs07 uses) would let the advancing watermark
-    drop late-arriving LEFT/RIGHT input rows and break the batch-equality
-    oracle — do not inherit the exact-oracle claim without re-deriving it.
-    """
+def _purchase_error_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """Shared body of qs10 (inner) and qs16 (leftOuter): purchases joined
+    to the same user's errors within ±6 h of event time, both sides read
+    as streams from the one events file, run availableNow → memory."""
     purchases = read_events_stream(spark, _events_path(sf_dir)).where(
         F.col("event_type") == "purchase"
     ).select(F.col("event_id").alias("purchase_id"), "user_id", "ts")
@@ -429,6 +420,7 @@ def qs10_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         right_time="error_ts",
         lower_seconds=-6 * 3600,
         upper_seconds=6 * 3600,
+        how=how,
     )
     out = run_to_memory(
         joined.select(
@@ -441,6 +433,22 @@ def qs10_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "append",
     )
     return out.orderBy("purchase_id", "error_id")
+
+
+def qs10_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-STREAM interval join in a REAL run: purchases joined to the
+    same user's errors within ±6 h of event time, both sides read as
+    streams (availableNow → memory). Exactness here depends on the
+    SINGLE-BATCH availableNow run: with the whole file in micro-batch 1
+    the watermark is still 0 while every row is joined, so no input can be
+    older than watermark−interval and the result equals the batch
+    inequality join (no finalization cutoff to replicate, unlike
+    qs08/qs09's append-mode aggregates). A multi-batch variant (e.g.
+    max_files_per_trigger as qs07 uses) would let the advancing watermark
+    drop late-arriving LEFT/RIGHT input rows and break the batch-equality
+    oracle — do not inherit the exact-oracle claim without re-deriving it.
+    """
+    return _purchase_error_join(spark, sf_dir, "inner")
 
 
 QS10_SQL = """
@@ -998,33 +1006,7 @@ def qs16_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
       state and are NEVER emitted by an availableNow run — the oracle
       must replicate the cutoff, not the batch left join.
     """
-    purchases = read_events_stream(spark, _events_path(sf_dir)).where(
-        F.col("event_type") == "purchase"
-    ).select(F.col("event_id").alias("purchase_id"), "user_id", "ts")
-    errors = read_events_stream(spark, _events_path(sf_dir)).where(
-        F.col("event_type") == "error"
-    ).select("user_id", F.col("event_id").alias("error_id"), F.col("ts").alias("error_ts"))
-    joined = transforms.interval_join(
-        purchases,
-        errors,
-        key="user_id",
-        left_time="ts",
-        right_time="error_ts",
-        lower_seconds=-6 * 3600,
-        upper_seconds=6 * 3600,
-        how="leftOuter",
-    )
-    out = run_to_memory(
-        joined.select(
-            "purchase_id",
-            F.col("l.user_id").alias("user_id"),
-            F.date_format("ts", transforms.TS_FMT).alias("purchase_ts"),
-            "error_id",
-            F.date_format("error_ts", transforms.TS_FMT).alias("error_ts"),
-        ),
-        "append",
-    )
-    return out.orderBy("purchase_id", "error_id")
+    return _purchase_error_join(spark, sf_dir, "leftOuter")
 
 
 QS16_SQL = """

@@ -96,9 +96,10 @@ class MockKinesisClient:
 class FileKinesisClient:
     """File-backed client for end-to-end local-mode tests: each put_record
     appends one JSON line to a spool file (executors share the local FS).
-    ``put_records`` spools each batch record the same way, so the batch
-    API's wire output is round-trippable through ``kinesis_replay`` too
-    (qv10 hash-gates that loop)."""
+    ``put_records`` spools each batch record the same way, so both APIs'
+    wire output reads back through ``sources.kinesis_source.spool_items``
+    (batch) or the ``kinesis_replay`` stream reader (qv09/qv10 hash-gate
+    the batch loop for each API)."""
 
     def __init__(self, spool_dir: str) -> None:
         self.spool_dir = spool_dir

@@ -1113,11 +1113,10 @@ def _check_envelope(spark, tmp_path_factory, rows, name):
     "name",
     [
         # the two wire LOOPS (sink spool → consume → aggregate): each
-        # example spools through the REAL client seam — adversarial
-        # event names must survive serialize→chunk→record→parse
-        # losslessly. qv09 additionally pays a per-record Python
-        # DataSource read per example (the costliest single fuzz row in
-        # the r12 durations profile, 61 s at 6 examples)
+        # example spools through the REAL client seam (PutRecord for
+        # qv09, PutRecords for qv10) and reads back via spool_items —
+        # adversarial event names must survive
+        # serialize→chunk→record→parse losslessly
         "qv09_consume_roundtrip",
         "qv10_put_records_roundtrip",
     ],

@@ -1,8 +1,9 @@
-"""Consume-side round trip: sink spool → kinesis_replay source.
+"""Consume-side round trip: sink spool → spool_items / kinesis_replay.
 
 The sink ships one JSON-array record per greedy chunk (the reference's
 wire format, main.go:266-276); the source must unbatch every record back
-into the exact envelope items — batch AND micro-batch stream paths.
+into the exact envelope items — through the batch scan (``spool_items``)
+AND the micro-batch stream replay reader (``kinesis_replay``).
 """
 
 from __future__ import annotations
@@ -30,17 +31,49 @@ def _fill_spool(spark, spool: str, n: int = 120) -> list[str]:
     return expected
 
 
+def _parsed(items) -> list:
+    """Items as parsed JSON in a canonical order. spool_items renders
+    through variant, which normalizes integral doubles ("11.0" → "11"),
+    so items compare as values, not bytes; ints parse as floats so both
+    renders of one number sort and compare alike."""
+    return sorted(
+        (json.loads(i, parse_int=float) for i in items),
+        key=lambda d: json.dumps(d, sort_keys=True),
+    )
+
+
+def _replay_rows(spool: str) -> list:
+    """Every row the stream replay reader emits for ``spool``, driven
+    through its own offset hooks (initialOffset, then read until the
+    offset stops moving)."""
+    from streamsurfer_spark.sources.kinesis_source import _SpoolStreamReader
+
+    reader = _SpoolStreamReader({"spool_dir": spool, "batch_files": 7})
+    off, rows = reader.initialOffset(), []
+    while True:
+        batch, nxt = reader.read(off)
+        rows.extend(batch)
+        if nxt["next_file"] == off["next_file"]:
+            return rows
+        off = nxt
+
+
+def _replay_stream(spark, spool: str):
+    from streamsurfer_spark.sources.kinesis_source import register
+
+    register(spark)
+    return spark.readStream.format("kinesis_replay").option("spool_dir", spool).load()
+
+
 def test_spool_batch_round_trip(spark, tmp_path):
     spool = str(tmp_path / "spool")
     expected = _fill_spool(spark, spool)
 
-    from streamsurfer_spark.sources.kinesis_source import register
+    from streamsurfer_spark.sources.kinesis_source import spool_items
 
-    register(spark)
-    out = spark.read.format("kinesis_replay").option("spool_dir", spool).load()
-    rows = out.collect()
+    rows = spool_items(spark, spool).collect()
 
-    assert sorted(r.item for r in rows) == expected
+    assert _parsed(r.item for r in rows) == _parsed(expected)
     # every item is the sink's envelope: origin stamped, parseable JSON
     assert all(json.loads(r.item)["origin"] == "rt" for r in rows)
     # metadata columns land in the RIGHT columns (a round-6 review found
@@ -97,10 +130,12 @@ def test_spool_stream_round_trip(spark, tmp_path):
 
 def test_boto3_gated_and_option_validation(spark):
     import pytest
+    from pyspark.errors import AnalysisException
 
     from streamsurfer_spark.sources.kinesis_source import (
         KinesisReplaySource,
         _Boto3Reader,
+        register,
     )
 
     reader = _Boto3Reader({"stream_name": "s", "region": "us-east-1"})
@@ -111,76 +146,46 @@ def test_boto3_gated_and_option_validation(spark):
         # without any network call
         assert reader._client() is not None
     except ImportError:
-        with pytest.raises(NotImplementedError, match="spool_dir replay"):
+        with pytest.raises(NotImplementedError, match="spool_items"):
             reader._client()
-    with pytest.raises(ValueError, match="spool_dir or stream_name"):
+    with pytest.raises(ValueError, match="spool_items"):
         KinesisReplaySource({}).reader(None)
+    # a batch read of a spool fails loudly, pointing at spool_items
+    register(spark)
+    with pytest.raises(AnalysisException, match="spool_items"):
+        spark.read.format("kinesis_replay").option(
+            "spool_dir", "/nonexistent"
+        ).load().collect()
     with pytest.raises(ValueError, match="landing zone"):
         KinesisReplaySource({"stream_name": "s"}).simpleStreamReader(None)
 
 
 def test_spool_items_matches_datasource(spark, tmp_path):
-    """The JVM scan path (spool_items: read.json → from_json array<variant>
-    → posexplode → to_json) must agree with the Python DataSource unbatch
-    on a real sink-produced spool — the equivalence the 100 TB
-    consume-side scan relies on (r7: the one Python-loop row path in the
-    repo, now with a codegen twin). Metadata columns are byte-exact; the
-    item payloads are JSON-equal (variant normalizes integral doubles,
+    """The batch scan (spool_items: read.json → from_json array<variant>
+    → posexplode → to_json) must agree with the kinesis_replay DataSource's
+    stream replay reader on a real sink-produced spool — the two unbatch
+    paths of one wire format. Metadata columns are byte-exact; the item
+    payloads are JSON-equal (variant normalizes integral doubles,
     "11.0" → "11" — invisible to the from_json consumers downstream, and
     the only render difference on the envelope wire domain)."""
-    from streamsurfer_spark.sources.kinesis_source import register, spool_items
+    from streamsurfer_spark.sources.kinesis_source import spool_items
 
     spool = str(tmp_path / "spool")
     _fill_spool(spark, spool)
 
-    register(spark)
-    ds = spark.read.format("kinesis_replay").option("spool_dir", spool).load()
     jvm = spool_items(spark, spool)
-
-    assert ds.columns == jvm.columns
+    assert _replay_stream(spark, spool).columns == jvm.columns
 
     def canon(rows):
-        keyed = sorted(
-            ((r.stream, r.shard_id, r.partition_key, r.record_seq, r.item_index),
-             json.loads(r.item))
-            for r in rows
+        return sorted(
+            (tuple(r[:5]), json.loads(r[5])) for r in rows
         )
-        return keyed
 
-    ds_rows, jvm_rows = canon(ds.collect()), canon(jvm.collect())
-    assert len(ds_rows) == len(jvm_rows) > 0
+    replay_rows, jvm_rows = canon(_replay_rows(spool)), canon(jvm.collect())
+    assert len(replay_rows) == len(jvm_rows) > 0
     # python dict equality compares 11.0 == 11 numerically — exactly the
     # normalization tolerance we want
-    assert ds_rows == jvm_rows
-
-
-def test_spool_partitions_are_bounded_groups(tmp_path):
-    """Spool batch reads group files into at most max_partitions input
-    partitions (default 64) — one-partition-per-file measured super-linear
-    at the 30× probe (BASELINE.md round-7). Grouping must preserve each
-    file's GLOBAL sorted seq and cover every file exactly once."""
-    import os
-
-    from streamsurfer_spark.sources.kinesis_source import _SpoolReader
-
-    spool = str(tmp_path / "spool")
-    os.makedirs(spool)
-    names = [f"rec_{i:05d}.json" for i in range(200)]
-    for n in names:
-        with open(os.path.join(spool, n), "w") as f:
-            f.write('{"Data": "[]"}')
-
-    parts = _SpoolReader({"spool_dir": spool}).partitions()
-    assert len(parts) <= 64
-    flat = [pair for p in parts for pair in p.value]
-    assert flat == [(n, i) for i, n in enumerate(names)]
-
-    # explicit option honored
-    parts4 = _SpoolReader(
-        {"spool_dir": spool, "max_partitions": "4"}
-    ).partitions()
-    assert len(parts4) == 4
-    assert [pair for p in parts4 for pair in p.value] == flat
+    assert replay_rows == jvm_rows
 
 
 def test_spool_items_failure_parity(spark, tmp_path):
@@ -256,31 +261,24 @@ def test_flush_put_records_parks_on_raising_call():
 
 def test_empty_spool_both_paths_return_zero_rows(spark, tmp_path):
     """An EMPTY spool (producer saw zero rows) must read back as an empty
-    frame on BOTH consume paths, not error. The round-7 empty-fixture
-    sweep caught both: Spark substitutes [None] for an empty DataSource
-    partitions() list and still calls read(None) (pyspark worker
-    plan_data_source_read), and the JVM scan's *.json glob raises
-    PATH_NOT_FOUND when the directory has no spool files."""
-    from streamsurfer_spark.sources.kinesis_source import (
-        SCHEMA,
-        register,
-        spool_items,
-    )
-
-    spool = str(tmp_path / "empty_spool")
+    frame through spool_items and as zero rows through the stream replay
+    reader, not error: the JVM scan's *.json glob raises PATH_NOT_FOUND
+    when the directory has no spool files."""
     import os
 
+    from streamsurfer_spark.sources.kinesis_source import spool_items
+
+    spool = str(tmp_path / "empty_spool")
     os.makedirs(spool)
 
-    register(spark)
-    ds = spark.read.format("kinesis_replay").option("spool_dir", spool).load()
     jvm = spool_items(spark, spool)
+    stream = _replay_stream(spark, spool)
 
-    assert ds.count() == 0
     assert jvm.count() == 0
+    assert _replay_rows(spool) == []
     # same shape as the populated path — downstream from_json/aggregate
     # plans bind by name either way
-    assert ds.columns == jvm.columns
-    assert [f.dataType for f in ds.schema.fields] == [
+    assert stream.columns == jvm.columns
+    assert [f.dataType for f in stream.schema.fields] == [
         f.dataType for f in jvm.schema.fields
     ]

@@ -57,8 +57,8 @@ PROBES = (
     # index-only state pinning, lazy decisions)
     "qs15_stream_lsh_dedup",
     # round-7 additions: the full produce→consume wire loops through both
-    # sink APIs (PutRecord/Python-DataSource consume vs PutRecords/JVM
-    # scan). Constructing these specs is EFFECTFUL — the spool write (a
+    # sink APIs (PutRecord vs PutRecords, both read back by the
+    # spool_items JVM scan). Constructing these specs is EFFECTFUL — the spool write (a
     # foreachPartition job over the replicated events table) happens
     # inside spec.spark(), so the probe row measures the WHOLE loop:
     # envelope + chunking + spool + unbatch + parse + aggregate.
